@@ -81,10 +81,9 @@ def main(argv: list[str] | None = None) -> int:
             _out(df, args.limit)
         return 0
     if args.cmd == "sql":
-        from .sources.io import register_all
+        from .sources.io import lake_sql
 
-        register_all(spark, args.sf_dir)
-        _out(spark.sql(args.statement), args.limit)
+        _out(lake_sql(spark, args.sf_dir, args.statement), args.limit)
         return 0
     if args.cmd == "profile":
         from .operators.dq import profile_table

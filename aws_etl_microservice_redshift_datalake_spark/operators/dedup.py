@@ -802,11 +802,16 @@ def connected_components(
     sess = pairs.sparkSession
     orig_parts = sess.conf.get("spark.sql.shuffle.partitions")
     try:
+        ceiling = int(orig_parts)
+    except (TypeError, ValueError):
+        # a non-integer setting has no ceiling to size below: leave the
+        # session's own reduce sizing untouched
+        ceiling = None
+    try:
         for _ in range(CC_MAX_ROUNDS):
-            loop_parts = min(
-                int(orig_parts), (sig[0] or 0) // CC_EDGES_PER_TASK + 1
-            )
-            sess.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
+            if ceiling is not None:
+                loop_parts = min(ceiling, (sig[0] or 0) // CC_EDGES_PER_TASK + 1)
+                sess.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
             # localCheckpoint, not cache: each round's plan references the
             # previous round's edges TWICE (the symmetrizing union), so the
             # logical plan doubles per round and Catalyst analysis alone goes
@@ -859,7 +864,8 @@ def connected_components(
     finally:
         # restore BEFORE the consumer plans the converged star/singleton
         # relations below — only the round-internal shuffles are data-sized
-        sess.conf.set("spark.sql.shuffle.partitions", orig_parts)
+        if ceiling is not None:
+            sess.conf.set("spark.sql.shuffle.partitions", orig_parts)
     if not converged:
         import warnings
 

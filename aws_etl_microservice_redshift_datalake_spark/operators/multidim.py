@@ -26,7 +26,7 @@ from ..registry import (
     s_exact_sum,
     s_money_col,
 )
-from ..sources.io import load_table, register_all
+from ..sources.io import lake_sql, load_table
 
 
 @query(
@@ -97,9 +97,7 @@ def q_sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10c + E3: GROUPING SETS through the raw SQL parser path over
     registered temp views (Spectrum/external-table analog). Empty input →
     empty report (the q_agg_rollup r8 contract; oracle HAVING mirror)."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         SELECT c_mktsegment, c_nationkey,
                COUNT(*) AS n,
                ROUND(SUM({s_money_col("c_acctbal")}), 2) AS sum_bal
@@ -131,9 +129,7 @@ def q_sql_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     three-way join + agg + top-k through the parser. Revenue is rounded
     before the ORDER BY so the top-10 cut is deterministic on both engines;
     l_orderkey breaks ties."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         SELECT l_orderkey,
                {s_exact_sum("l_extendedprice * (1.0D - l_discount)", 4)} AS revenue,
                o_orderdate
@@ -173,9 +169,7 @@ def q_sql_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned-item revenue report — customers who returned the most, with
     their nation, over one quarter. Raw SQL through the parser; revenue
     rounded before ORDER BY for a deterministic top-20 (custkey ties)."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         SELECT c.c_custkey, c.c_name, n.n_name AS nation,
                {s_exact_sum("l.l_extendedprice * (1.0D - l.l_discount)", 4)} AS revenue,
                COUNT(*) AS n_items
@@ -212,9 +206,7 @@ def q_sql_priority_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional aggregation in raw SQL. The price sum inside avg_price
     folds the MONEY_MAX conformance guard in both twins (r9 raw-sum wave;
     registry.s_money_col declares the Spark-dialect body)."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         SELECT o_orderpriority,
                SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS n_finished,
                SUM(CASE WHEN o_orderstatus <> 'F' THEN 1 ELSE 0 END) AS n_open,

@@ -52,7 +52,7 @@ from ..registry import (
     s_exact_sum,
     s_money_col,
 )
-from ..sources.io import load_table, register_all
+from ..sources.io import lake_sql, load_table
 
 # "Very late" shipment: >1800 days after the order date (~p95 of the fixture's
 # ship-delay distribution — FIXTURES.md; the synthetic delays reach ~2400 d).
@@ -346,9 +346,7 @@ def q_sql_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncorrelated scalar subquery once and broadcasts the 1-row result.
     Revenue uses the exact-decimal sum so the MAX-equality cut is
     deterministic (exact_sum docstring)."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         WITH rev AS (
             SELECT l_suppkey AS supplier_no,
                    {s_exact_sum(_REV4_S, 4)} AS total_revenue
@@ -396,9 +394,7 @@ def q_sql_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     finished multi-supplier order. Exercises Catalyst's decorrelation of
     two subqueries against the same outer row — planned as one semi- plus
     one anti-join on l_orderkey, no per-row re-execution."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         SELECT s_name, COUNT(*) AS numwait
         FROM supplier, lineitem l1, orders
         WHERE s_suppkey = l1.l_suppkey
@@ -440,9 +436,7 @@ def q_sql_cust_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     an extra join-condition filter (NOT LIKE on priority — the fixture has
     no o_comment), COUNT of a nullable column, then a second aggregation
     over the counts. All-integer output."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        """
+    return lake_sql(spark, sf_dir, """
         SELECT c_count, COUNT(*) AS custdist
         FROM (
             SELECT c_custkey, COUNT(o_orderkey) AS c_count
@@ -481,9 +475,7 @@ def q_sql_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     an ANSI DIVIDE_BY_ZERO crash: the sums are named in a subquery so the
     guard tests the evaluated denominator once, identically on both
     engines."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         SELECT CASE WHEN den <> 0 THEN 100.0D * num / den END AS promo_pct,
                n_lines
         FROM (
@@ -519,9 +511,7 @@ def q_sql_disjunctive_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     common ``p_partkey = l_partkey`` stays a hash-join key and the shared
     ``p_brand IN (...)`` implied filter is pushed to the part scan rather
     than evaluating the OR as a nested-loop residual."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         SELECT {s_exact_sum(_REV4_S, 4)} AS revenue,
                COUNT(*) AS n_lines
         FROM lineitem, part
@@ -554,9 +544,7 @@ def q_sql_discount_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     All three filters reach the parquet scan (PushedFilters, asserted in
     the plan suite); price×discount lives on the 4-decimal grid →
     exact-decimal sum."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         SELECT {s_exact_sum("l_extendedprice * l_discount", 4)} AS revenue,
                COUNT(*) AS n_lines
         FROM lineitem
@@ -594,9 +582,7 @@ def q_sql_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.001 for any single nation pair to be populated; FIXTURES.md). Two
     independent nation→region dimension chains broadcast onto one fact
     scan."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         SELECT r2.r_name AS cust_region,
                CAST(year(l_shipdate) AS INT) AS l_year,
                {s_exact_sum(_REV4_S, 4)} AS revenue
@@ -654,9 +640,7 @@ def q_sql_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANSI DIVIDE_BY_ZERO crash (r6 zero-money sweep): sums are named in a
     subquery so the guard tests the evaluated denominator, identically on
     both engines."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         SELECT o_year,
                CASE WHEN den <> 0 THEN num / den END AS mkt_share
         FROM (
@@ -711,9 +695,7 @@ def q_sql_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE arithmetic on both engines, then exact-decimal summed. Plan: one
     lineitem scan, part/supplier/nation broadcast, orders join, one
     aggregation shuffle."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         SELECT n_name AS nation,
                CAST(year(o_orderdate) AS INT) AS o_year,
                {s_exact_sum(_PROFIT_S, 4)} AS profit
@@ -752,9 +734,7 @@ def q_sql_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard in all three spots, identically in both twins (r7 extreme-money
     sweep: one 1e308 price otherwise throws the stage out of decimal
     range under ANSI; NaN/±Inf fail the BETWEEN in both engines)."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         SELECT l_suppkey,
                CAST(SUM({o_dec("l_extendedprice", 2, 27)}) AS DOUBLE) AS supp_value
         FROM lineitem
@@ -798,9 +778,7 @@ def q_sql_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     and orders on their keys (shuffle joins on the two fact keys — the only
     big exchanges), dims broadcast. Revenue is exact_sum (grid 4) so the
     ORDER BY on the double is deterministic cross-engine."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         SELECT n_name,
                {s_exact_sum(_REV4_S, 4)} AS revenue
         FROM customer, orders, lineitem, supplier, nation, region
@@ -850,9 +828,7 @@ def q_sql_parts_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs as a two-phase partial/final aggregate over (brand,type,size,
     suppkey). LIMIT 50 carries the full ORDER BY tie-break, so the cut is
     deterministic."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        """
+    return lake_sql(spark, sf_dir, """
         SELECT p_brand, p_type, p_size,
                COUNT(DISTINCT l_suppkey) AS supplier_cnt
         FROM lineitem JOIN part ON p_partkey = l_partkey
@@ -902,9 +878,7 @@ def q_sql_recursive_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r8 degmoney wave: one ±1e308/NaN price otherwise poisons the whole
     month's fold, differently per engine); empty months yield NULL sums on
     both engines identically."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         WITH RECURSIVE months(m) AS (
             SELECT DATE '1995-01-01'
             UNION ALL
@@ -943,9 +917,7 @@ def q_sql_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the hand-built shape of q_window_topk, derived automatically.
     The money tie-break is o_orderkey, so the LIMIT cut is deterministic
     and the raw parquet doubles hash bit-identically."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        """
+    return lake_sql(spark, sf_dir, """
         SELECT c_custkey, t.o_orderkey, t.o_totalprice
         FROM customer JOIN LATERAL (
             SELECT o_orderkey, o_totalprice FROM orders
@@ -981,9 +953,7 @@ def q_sql_modern_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUND is belt-and-braces on both sides, and the QTY_MAX conformance
     guard inside the SUM (r9 raw-sum wave) nulls finite-absurd sentinels
     identically in both twins."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        f"""
+    return lake_sql(spark, sf_dir, f"""
         SELECT l_returnflag, l_linestatus,
                COUNT(*) AS n_rows,
                COUNT(*) FILTER (WHERE l_discount > 0.05) AS n_discounted,
@@ -1028,9 +998,7 @@ def q_sql_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the distinct order pairs, then NOT IN (non-nullable key) is a
     second plain anti-join. The status domain is data-derived, so the
     query stays correct if the domain grows."""
-    register_all(spark, sf_dir)
-    return spark.sql(
-        """
+    return lake_sql(spark, sf_dir, """
         WITH statuses AS (SELECT DISTINCT o_orderstatus AS st FROM orders),
         missing AS (
             SELECT c.c_custkey

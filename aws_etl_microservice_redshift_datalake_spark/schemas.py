@@ -1,10 +1,13 @@
 """Declared schemas for the ten driver tables (SURVEY.md §1.2, FIXTURES.md).
 
-Fixed explicit schemas, asserted in tests against what spark.read.parquet
-infers — the Parquet files are self-describing so inference is exact; the
-declarations exist so code (and the judge) can see the engine's type surface
-in one place, mirroring a warehouse DDL catalog (public Redshift semantics;
-reference dir is empty — SURVEY.md §0).
+This is the engine's DDL catalog and its read path: ``sources.io.load_table``
+scans every table with ``SCHEMAS[name]`` once the table's parquet footers
+match it, so a scan launches no schema-inference job — the way Redshift
+COPY and Spectrum external tables read a lake through declared DDL (public
+Redshift semantics; reference dir is empty — SURVEY.md §0). A table whose
+footers drift from its declaration is read through Spark's own inference
+instead. Tests assert each declaration equals what Spark infers from the
+shipped parquet.
 """
 
 from __future__ import annotations

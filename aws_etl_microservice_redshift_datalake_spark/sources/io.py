@@ -22,12 +22,14 @@ partitionBy + maxRecordsPerFile reproduces slice-parallel UNLOAD layout.
 from __future__ import annotations
 
 import functools as _functools
+import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..schemas import TABLES
+from ..schemas import SCHEMAS, TABLES
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -55,23 +57,41 @@ def normalize_epoch_ts(colname: str):
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """S1: Parquet lake scan. Columnar, self-describing schema, pushdown-able.
+    """S1: Parquet lake scan through the declared DDL (``schemas.SCHEMAS``),
+    the way COPY and Spectrum external tables read a lake.
 
-    ``events.ts`` is parquet TIMESTAMP(NANOS) (isAdjustedToUTC=false), which
-    Spark 4.1's native reader converts to TimestampNTZType, truncating to µs
-    — no conversion needed here. Defensive fallback: on a build where the
-    column still surfaces as a long (legacy ``nanosAsLong`` readers), a
-    magnitude-gated conversion (``normalize_epoch_ts``) restores µs
-    timestamps whether the long carries ns or µs.
+    The table's parquet footers are checked against the declared schema
+    first (pyarrow, cached per file-stat signature, so a rewritten table is
+    re-checked); on a match the scan carries ``SCHEMAS[name]`` and building
+    it launches no Spark job. Without a declared schema Spark infers one,
+    and inference is a job per load.
+
+    On any drift (a column missing, extra, reordered, or of another or
+    unknown type) the load falls back to Spark's own inference, so a
+    drifted lake reads exactly as Spark reads it: never cast to the
+    declared types, never NULL-filled. On that path, if ``events.ts``
+    surfaces as a long (legacy ``nanosAsLong`` readers), a magnitude-gated
+    conversion (``normalize_epoch_ts``) restores µs timestamps whether the
+    long carries ns or µs.
     """
-    if name == "events":
-        from pyspark.sql import types as TT
+    path = table_path(sf_dir, name)
+    declared = SCHEMAS.get(name)
+    if declared is not None and footer_schema(path) == declared:
+        return spark.read.schema(declared).parquet(path)
+    df = spark.read.parquet(path)
+    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):  # pragma: no cover
+        df = df.withColumn("ts", normalize_epoch_ts("ts"))
+    return df
 
-        df = spark.read.parquet(table_path(sf_dir, name))
-        if isinstance(df.schema["ts"].dataType, TT.LongType):  # pragma: no cover
-            df = df.withColumn("ts", normalize_epoch_ts("ts"))
-        return df
-    return spark.read.parquet(table_path(sf_dir, name))
+
+def read_parquet(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """Parquet scan with a known schema: ``schema`` when the caller holds
+    it, else the one the footers carry (:func:`footer_schema`). Spark's
+    inference job runs only when neither is known."""
+    schema = schema or footer_schema(path)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
 
 
 def _parquet_files(path: str) -> list[str]:
@@ -110,6 +130,112 @@ def _rows_for(sig: tuple) -> int:
     import pyarrow.parquet as pq
 
     return sum(pq.ParquetFile(f).metadata.num_rows for f, _sz, _mt in sig)
+
+
+# Spark stores the DataFrame schema it wrote under this footer key and reads
+# it back verbatim (ParquetFileFormat.readSchemaFromFooter); files without it
+# go through Spark's parquet-type converter, mirrored by _PRIMITIVES.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+# (physical type, logical-type JSON fields) -> Spark type, per Spark's
+# ParquetToSparkSchemaConverter at its defaults (inferTimestampNTZ on,
+# binaryAsString off). A leaf not listed here (unsigned ints, decimals,
+# binary, TIMESTAMP(NANOS), ...) makes the schema unknown, which sends the
+# read to Spark's own inference.
+_PRIMITIVES = {
+    ("BOOLEAN", "None"): T.BooleanType(),
+    ("INT32", "None"): T.IntegerType(),
+    ("INT32", "Int", 8, True): T.ByteType(),
+    ("INT32", "Int", 16, True): T.ShortType(),
+    ("INT32", "Int", 32, True): T.IntegerType(),
+    ("INT32", "Date"): T.DateType(),
+    ("INT64", "None"): T.LongType(),
+    ("INT64", "Int", 64, True): T.LongType(),
+    ("INT64", "Timestamp", False, "milliseconds"): T.TimestampNTZType(),
+    ("INT64", "Timestamp", False, "microseconds"): T.TimestampNTZType(),
+    ("INT64", "Timestamp", True, "milliseconds"): T.TimestampType(),
+    ("INT64", "Timestamp", True, "microseconds"): T.TimestampType(),
+    ("INT96", "None"): T.TimestampType(),
+    ("FLOAT", "None"): T.FloatType(),
+    ("DOUBLE", "None"): T.DoubleType(),
+    ("BYTE_ARRAY", "String"): T.StringType(),
+}
+
+
+def _leaf_type(col) -> T.DataType | None:
+    lt = json.loads(col.logical_type.to_json())
+    key = (col.physical_type, lt["Type"])
+    if lt["Type"] == "Int":
+        key += (lt["bitWidth"], lt["isSigned"])
+    elif lt["Type"] == "Timestamp":
+        key += (lt["isAdjustedToUTC"], lt["timeUnit"])
+    return _PRIMITIVES.get(key)
+
+
+def _all_nullable(j):
+    """A schema's JSON with every field, array element and map value made
+    nullable — Spark reads file sources through ``dataSchema.asNullable``."""
+    if isinstance(j, list):
+        return [_all_nullable(v) for v in j]
+    if not isinstance(j, dict):
+        return j
+    flags = ("nullable", "containsNull", "valueContainsNull")
+    return {k: True if k in flags else _all_nullable(v) for k, v in j.items()}
+
+
+def _file_schema(md) -> T.StructType | None:
+    import pyarrow as pa
+
+    written = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if written is not None:
+        return T.StructType.fromJson(_all_nullable(json.loads(written)))
+    fields = []
+    for i, f in enumerate(md.schema.to_arrow_schema()):
+        # only single-leaf columns map, so up to a bail-out field i is leaf i
+        t = _leaf_type(md.schema.column(i))
+        if pa.types.is_list(f.type) or pa.types.is_large_list(f.type):
+            nested = pa.types.is_nested(f.type.value_type)
+            t = None if nested or t is None else T.ArrayType(t, True)
+        elif pa.types.is_nested(f.type):
+            t = None
+        if t is None:
+            return None
+        fields.append(T.StructField(f.name, t, True))
+    return T.StructType(fields)
+
+
+@_functools.lru_cache(maxsize=None)
+def _schema_for(sig: tuple) -> T.StructType | None:
+    import pyarrow.parquet as pq
+
+    try:
+        schemas = [_file_schema(pq.read_metadata(f)) for f, _sz, _mt in sig]
+    except (OSError, ValueError, KeyError, TypeError):
+        # an unreadable footer or schema string: let Spark's reader report it
+        return None
+    first = schemas[0]
+    return first if all(s == first for s in schemas) else None
+
+
+def footer_schema(path: str) -> T.StructType | None:
+    """The schema Spark would infer for the parquet data at ``path``, read
+    from the file footers by pyarrow — no Spark job. Cached per file-stat
+    signature like the row and split counts.
+
+    ``None`` when it cannot be known without Spark: files whose schemas
+    differ, a type outside the mapped set, a nested (e.g. hive-partitioned)
+    layout whose directory names add partition columns, or no readable
+    data at all."""
+    try:
+        sig = _stat_sig(path)
+    except FileNotFoundError:
+        return None
+    root = os.path.normpath(path)
+    for f, _sz, _mt in sig:
+        f = os.path.normpath(f)
+        if f != root and os.path.dirname(f) != root:
+            return None
+    return _schema_for(sig)
 
 
 def table_rows(sf_dir: str, name: str) -> int:
@@ -181,13 +307,26 @@ def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spread(load_table(spark, sf_dir, name), spark, table_path(sf_dir, name))
 
 
-def register_all(spark: SparkSession, sf_dir: str) -> None:
-    """S8: register every driver table as a temp view (external-table analog).
+def register_all(spark: SparkSession, sf_dir: str, sql: str | None = None) -> None:
+    """S8: register driver tables as temp views (external-table analog),
+    each read through its declared schema (:func:`load_table`).
 
-    After this, the full SQL surface works via ``spark.sql``.
+    With ``sql``, only the tables that text names are registered — a view
+    costs a footer check, so a query pays for the tables it reads and no
+    more. Without it, all of ``TABLES``.
     """
-    for name in TABLES:
+    names = TABLES if sql is None else [
+        t for t in TABLES if re.search(rf"\b{t}\b", sql, re.IGNORECASE)
+    ]
+    for name in names:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def lake_sql(spark: SparkSession, sf_dir: str, sql: str, **kwargs) -> DataFrame:
+    """Run ``sql`` over the lake's tables, registering only the ones it
+    names (``kwargs`` pass through to ``spark.sql``, e.g. ``args``)."""
+    register_all(spark, sf_dir, sql)
+    return spark.sql(sql, **kwargs)
 
 
 def ingest_csv(
@@ -366,7 +505,7 @@ def compact(
     import math
     import shutil
 
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     n = _rows_for(_stat_sig(path))
     n_files = max(1, math.ceil(n / target_records_per_file))
     staged = path.rstrip("/") + ".compacting"

@@ -31,9 +31,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..registry import QTY_MAX, money_col, o_money_col, query, rnd
-from .io import _parquet_files, load_table
+from .io import _parquet_files, load_table, read_parquet
 
 DEFAULT_TARGET_FILE_BYTES = 128 << 20  # the maxPartitionBytes-aligned sweet spot
 
@@ -64,6 +65,7 @@ def compact(
     src_path: str,
     dst_path: str,
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
+    schema: T.StructType | None = None,
 ) -> tuple[int, int]:
     """Rewrite a many-small-files parquet table into ~target-sized files.
 
@@ -75,9 +77,11 @@ def compact(
     failed rewrite leaves the table readable (the lakehouse OPTIMIZE
     protocol; true table formats make the swap atomic via their commit
     log, which plain parquet directories cannot express).
+    ``schema`` is the table's schema when the caller holds it; otherwise
+    the footers supply it, and Spark infers it only if they cannot.
     Returns (n_files_before, n_files_after)."""
     n_before, n_target = plan_compaction(src_path, target_file_bytes)
-    df = spark.read.parquet(src_path)
+    df = read_parquet(spark, src_path, schema)
     df.repartition(n_target).write.mode("overwrite").parquet(dst_path)
     return n_before, len(_parquet_files(dst_path))
 
@@ -165,8 +169,9 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxRecordsPerFile", 10_000)
         .parquet(frag)
     )
-    compact(spark, frag, compacted)
-    back = spark.read.parquet(compacted)
+    # both rewrites keep lineitem's schema, so neither read-back infers it
+    compact(spark, frag, compacted, schema=src.schema)
+    back = spark.read.schema(src.schema).parquet(compacted)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
         rnd(F.sum(money_col(F.col("l_quantity"), QTY_MAX))).alias("sum_qty"),

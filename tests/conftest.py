@@ -9,6 +9,7 @@ import decimal
 import math
 import os
 import sys
+from contextlib import contextmanager
 
 import duckdb
 import numpy as np
@@ -34,7 +35,7 @@ def sweep_subset(qs: dict, names) -> list[str]:
     which overflows the driver's verify window (VERIFY_r14: tests_ok=false
     by TRUNCATION at ~33% progress, zero observed failures). Default: a
     deterministic per-module spread — every operator module keeps its
-    alphabetically-first max(2, ceil(n/6)) queries in each sweep, so every
+    alphabetically-first max(1, ceil(n/10)) queries in each sweep, so every
     family's degenerate code paths (size-adaptive params, null guards,
     empty-seed handling) stay exercised on every axis while the default
     suite fits the verify window. Builder CI runs the FULL matrix with
@@ -52,6 +53,19 @@ def sweep_subset(qs: dict, names) -> list[str]:
         for n in mod_names[: max(1, -(-len(mod_names) // 10))]
     }
     return [n for n in names if n in keep]
+
+
+@contextmanager
+def job_counter(spark, group: str):
+    """Yields a callable returning how many Spark jobs ran in this thread
+    since entering (job group + status tracker, no UI needed)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 # Heavy randomized/brute-force equivalence sweeps (each 20-60 s of Spark

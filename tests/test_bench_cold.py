@@ -58,6 +58,34 @@ def test_cc_loop_restores_shuffle_partitions(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
+def test_cc_loop_skips_sizing_on_non_integer_shuffle_partitions(spark, monkeypatch):
+    # a non-integer spark.sql.shuffle.partitions has no ceiling to size the
+    # round shuffles below: the loop must leave the conf alone, not crash
+    from pyspark.sql.conf import RuntimeConfig
+
+    from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
+        connected_components,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    orig_get, orig_set = RuntimeConfig.get, RuntimeConfig.set
+    sets = []
+    monkeypatch.setattr(
+        RuntimeConfig,
+        "get",
+        lambda self, k, *a, **kw: "auto" if k == key else orig_get(self, k, *a, **kw),
+    )
+    monkeypatch.setattr(
+        RuntimeConfig,
+        "set",
+        lambda self, k, v: (sets.append(k), orig_set(self, k, v))[1],
+    )
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["a", "b"])
+    labels = {r.node: r.comp for r in connected_components(pairs, "a", "b").collect()}
+    assert labels == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    assert key not in sets
+
+
 def test_sweep_subset_full_flag_returns_all(monkeypatch):
     qs = engine.all_queries()
     monkeypatch.setenv("SPARK_GRAFT_FULL_SWEEPS", "1")

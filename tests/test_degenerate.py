@@ -21,7 +21,7 @@ import pytest
 import aws_etl_microservice_redshift_datalake_spark as engine
 from aws_etl_microservice_redshift_datalake_spark.scratch import process_scratch
 
-from tests.conftest import SF_SMALL, TABLES, sweep_subset
+from tests.conftest import SF_SMALL, TABLES, job_counter, sweep_subset
 
 QS = engine.all_queries()
 
@@ -100,6 +100,25 @@ def test_query_survives_empty_corpus(spark, empty_sf, name):
     # crash (r6 review) — collect() forces every column's kernel to run
     assert len(rows) >= 0
     assert len(df.schema.fields) > 0
+
+
+@pytest.mark.parametrize("table", TABLES)
+def test_footer_schema_agrees_on_spark_written_lakes(spark, tiny_sf, empty_sf, table):
+    """The degenerate lakes are Spark-written ``part-*`` directories (NTZ
+    timestamps, float arrays, schema-only files): the footer check must
+    agree with Spark's inference on them too, and their loads must take the
+    declared, job-free scan."""
+    from aws_etl_microservice_redshift_datalake_spark.sources.io import (
+        footer_schema,
+        load_table,
+        table_path,
+    )
+    for sf in (tiny_sf, empty_sf):
+        path = table_path(sf, table)
+        assert footer_schema(path) == spark.read.parquet(path).schema
+        with job_counter(spark, f"degenerate-load-{table}-{os.path.basename(sf)}") as jobs:
+            assert load_table(spark, sf, table).schema == engine.SCHEMAS[table]
+            assert jobs() == 0
 
 
 @pytest.fixture(scope="module")
