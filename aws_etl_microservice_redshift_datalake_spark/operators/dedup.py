@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources.io import load_spread, table_rows
+from ..sources.io import load_spread, persisted, table_rows
 
 N_HASHES = 32
 N_BANDS = 16  # 2 rows per band
@@ -81,34 +81,18 @@ def _elem_gram_sql(arr: str, k: int) -> str:
     return " || ' ' || ".join(f"{arr}[i+{j}]" for j in range(k))
 
 
-_ARRS_MEMO: dict[tuple, tuple] = {}
-
-
 def _shingle_arrays_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shingle-array relation, persisted WITH a materialization barrier
-    and MEMOIZED per (session, table-state): every consumer (minhash,
-    ngram-Jaccard, and the cluster/pipeline queries that compose them)
-    shares ONE cached copy instead of stacking a fresh persist per call —
-    repeated invocations in one session (bench reps, composed queries)
-    were piling identical cached relations into storage memory ("Asked to
-    cache already cached data") until eviction pressure slowed everything.
-    The signature tracks the parquet footer state, so a rewritten corpus
-    re-materializes and the superseded relation is unpersisted
-    (operators._memo.session_memo — the sources.io cache-freshness rule).
+    """The shingle-array relation, cached through the CacheManager
+    (``sources.io.persisted``): every consumer (minhash, ngram-Jaccard, and
+    the cluster/pipeline queries that compose them) reads ONE cached copy,
+    and a rewritten corpus is refreshed by ``load_table``.
 
     Why persist + count barrier at all (round 4, measured): the relation
     feeds 3+ plan branches and a LAZY cache races — concurrent leaf stages
     each recompute AND serialize the same partitions (2.95 s uncached vs
     12.75 s lazily cached vs ~2.5 s barriered at the 10× corpus). The
     barrier runs at query-build time, which bench/driver timing includes."""
-    from ..sources.io import _stat_sig, table_path
-    from ._memo import session_memo
-
-    return session_memo(
-        _ARRS_MEMO, spark, sf_dir,
-        lambda: _stat_sig(table_path(sf_dir, "documents")),  # fresh-at-build
-        lambda: _shingle_arrays(spark, sf_dir),
-    )
+    return persisted(_shingle_arrays(spark, sf_dir))
 
 
 def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -249,7 +233,7 @@ def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle-sharing pairs; see module docstring for why recall is exact on
     this corpus.
     """
-    # persisted + barriered + memoized — see _shingle_arrays_persisted
+    # cached behind a count barrier — see _shingle_arrays_persisted
     arrs = _shingle_arrays_persisted(spark, sf_dir)
     n_bands, rows_per_band = _minhash_params(table_rows(sf_dir, "documents"))
     bands = minhash_bands(arrs, n_bands, rows_per_band)
@@ -345,7 +329,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of the classic inverted-index SELF-JOIN (measured 3.3-46 s
     # AQE flip swings at the 10× corpus for the join form).
     #
-    # The per-doc shingle ARRAYS are persisted/barriered/memoized (see
+    # The per-doc shingle ARRAYS are cached behind a count barrier (see
     # _shingle_arrays_persisted): the cap's count pass and the posting
     # probe both need the exploded occurrences; caching the ARRAY form
     # (one row per doc, 50× fewer rows than exploded) makes the expensive
@@ -644,12 +628,6 @@ CC_MAX_ROUNDS = 20  # safety cap; large-star/small-star needs O(log² n)
 #   the only shape that survives mega-hub components.
 CC_WINDOW_MAX_EDGES = 5_000_000  # below this, per-round fixed cost dominates
 
-CC_EDGES_PER_TASK = 50_000  # reduce-task sizing for the round shuffles: the
-# loop lowers spark.sql.shuffle.partitions to ~1 task per 50k edges (never
-# above the session default) — see the adaptive block in
-# connected_components; pure scheduler-overhead control, label-neutral
-
-
 def _large_star(e: DataFrame, use_window: bool) -> DataFrame:
     """Large-star (Kiveris et al. '14): every node u links each strictly
     LARGER neighbor to m(u) = min(Γ(u) ∪ {u}). Duplicate emits are left in
@@ -760,11 +738,11 @@ def connected_components(
         while pending_unpersist:
             pending_unpersist.pop().unpersist()
 
-    e = _ckpt(
-        pairs.select(F.col(col_a).alias("a"), F.col(col_b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    # the input feeds both the first edge set and the node list at the end,
+    # so it is checkpointed too: an input plan such as the minhash pair
+    # relation (band join + verify) would otherwise run twice per call
+    inp = _ckpt(pairs.select(F.col(col_a).alias("a"), F.col(col_b).alias("b")))
+    e = _ckpt(inp.filter(F.col("a") != F.col("b")).distinct())
     # order-insensitive edge-set fingerprint: count + XOR of per-edge hashes
     # (XOR, not SUM — a long SUM overflows under ANSI mode; edges are
     # distinct so XOR cancellation cannot collide two different sets except
@@ -785,87 +763,59 @@ def connected_components(
         # persist must not stay pinned for the session lifetime
         _drain()
     converged = False
-    # Scale-ADAPTIVE loop parallelism (r15, guide §2.2 "fewer, larger reduce
-    # partitions" sized from the DATA, not the core count): each star round
-    # is ~4-6 exchanges, so one fixpoint action schedules ~12 shuffles × the
-    # session's reduce-partition count of tasks — on a few-hundred-edge
-    # verified-pair graph that is hundreds of near-empty tasks of pure
-    # scheduler latency per action (the measured ~0.9 s/action floor).
-    # Reduce tasks are sized from the MEASURED per-round edge count
-    # (~CC_EDGES_PER_TASK edges each, re-derived every round because
-    # large-star can grow the edge set); the session default is the CEILING
-    # — never raised, so corpus-scale graphs keep the configured cluster
-    # parallelism. The conf is session-scoped: a concurrent query planned in
-    # another driver thread during a round would transiently see the lower
-    # value (single-threaded drivers — this bench, the driver harness, the
-    # tests — are unaffected); restored in the finally.
-    sess = pairs.sparkSession
-    orig_parts = sess.conf.get("spark.sql.shuffle.partitions")
-    try:
-        ceiling = int(orig_parts)
-    except (TypeError, ValueError):
-        # a non-integer setting has no ceiling to size below: leave the
-        # session's own reduce sizing untouched
-        ceiling = None
-    try:
-        for _ in range(CC_MAX_ROUNDS):
-            if ceiling is not None:
-                loop_parts = min(ceiling, (sig[0] or 0) // CC_EDGES_PER_TASK + 1)
-                sess.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-            # localCheckpoint, not cache: each round's plan references the
-            # previous round's edges TWICE (the symmetrizing union), so the
-            # logical plan doubles per round and Catalyst analysis alone goes
-            # exponential by round ~6 (measured: 1 s/round → 67 s at round 6
-            # on a 60-node path). Checkpointing truncates lineage to the
-            # materialized partitions — constant per-round plan. LAZY (r5):
-            # the fixpoint signature is the round's FIRST action, so it
-            # computes, persists, and fingerprints the edges in ONE job — the
-            # eager form ran two actions per round and the extra fixed job
-            # latency was 27% of the headline bench (VERDICT r4 #5). On a
-            # real cluster use reliable checkpoint() (localCheckpoint loses
-            # partitions on executor failure) — same one-line swap.
-            # the spelling decision now holds for TWO star rounds, and a
-            # single large-star pass can roughly double the edge set — so the
-            # window spelling is only safe up to HALF the cap, or the second
-            # round could run min-over-window on a graph past the mega-hub
-            # threshold
-            use_window = (sig[0] or 0) <= CC_WINDOW_MAX_EDGES // 2
-            # TWO star rounds per checkpoint/signature (r5): per-action fixed
-            # cost (job scheduling + Catalyst on a multi-exchange DAG)
-            # dominates at bench scale (~0.9 s/action on a 256-edge graph),
-            # so halving the action count nearly halves wall time; lineage
-            # depth stays bounded at two rounds, far from the exponential
-            # regime, and a fixpoint of one star round is a fixpoint of two,
-            # so convergence detection is unchanged (at worst detected one
-            # odd round late).
-            new = e
-            for _ in range(2):
-                new = _small_star(_large_star(new, use_window), use_window)
-            new = _ckpt(new)
-            try:
-                new_sig = _sig(new)
-            finally:
-                # same backstop per round: a failed action must not leak the
-                # round's persist (a retrying long-lived driver would stack
-                # one corpus-scale cached edge set per failed attempt)
-                _drain()
-            if new_sig == sig and new.exceptAll(e).isEmpty():
-                # signature match is probabilistic (~2^-64 collision); both
-                # relations are already materialized, so confirming set
-                # equality exactly (equal counts + empty one-sided
-                # difference) costs one cheap scan ONCE at convergence —
-                # deterministic termination (ADVICE r4). On the vanishing
-                # collision branch the loop just keeps iterating.
-                e = new
-                converged = True
-                break
+    # The round shuffles take the session's reduce-partition count; AQE
+    # coalescing (on by default) sizes them from the data. The loop never
+    # sets session conf: other threads plan queries on the same session.
+    for _ in range(CC_MAX_ROUNDS):
+        # localCheckpoint, not cache: each round's plan references the
+        # previous round's edges TWICE (the symmetrizing union), so the
+        # logical plan doubles per round and Catalyst analysis alone goes
+        # exponential by round ~6 (measured: 1 s/round → 67 s at round 6
+        # on a 60-node path). Checkpointing truncates lineage to the
+        # materialized partitions — constant per-round plan. LAZY (r5):
+        # the fixpoint signature is the round's FIRST action, so it
+        # computes, persists, and fingerprints the edges in ONE job — the
+        # eager form ran two actions per round and the extra fixed job
+        # latency was 27% of the headline bench (VERDICT r4 #5). On a
+        # real cluster use reliable checkpoint() (localCheckpoint loses
+        # partitions on executor failure) — same one-line swap.
+        # the spelling decision now holds for TWO star rounds, and a
+        # single large-star pass can roughly double the edge set — so the
+        # window spelling is only safe up to HALF the cap, or the second
+        # round could run min-over-window on a graph past the mega-hub
+        # threshold
+        use_window = (sig[0] or 0) <= CC_WINDOW_MAX_EDGES // 2
+        # TWO star rounds per checkpoint/signature (r5): per-action fixed
+        # cost (job scheduling + Catalyst on a multi-exchange DAG)
+        # dominates at bench scale (~0.9 s/action on a 256-edge graph),
+        # so halving the action count nearly halves wall time; lineage
+        # depth stays bounded at two rounds, far from the exponential
+        # regime, and a fixpoint of one star round is a fixpoint of two,
+        # so convergence detection is unchanged (at worst detected one
+        # odd round late).
+        new = e
+        for _ in range(2):
+            new = _small_star(_large_star(new, use_window), use_window)
+        new = _ckpt(new)
+        try:
+            new_sig = _sig(new)
+        finally:
+            # same backstop per round: a failed action must not leak the
+            # round's persist (a retrying long-lived driver would stack
+            # one corpus-scale cached edge set per failed attempt)
+            _drain()
+        if new_sig == sig and new.exceptAll(e).isEmpty():
+            # signature match is probabilistic (~2^-64 collision); both
+            # relations are already materialized, so confirming set
+            # equality exactly (equal counts + empty one-sided
+            # difference) costs one cheap scan ONCE at convergence —
+            # deterministic termination (ADVICE r4). On the vanishing
+            # collision branch the loop just keeps iterating.
             e = new
-            sig = new_sig
-    finally:
-        # restore BEFORE the consumer plans the converged star/singleton
-        # relations below — only the round-internal shuffles are data-sized
-        if ceiling is not None:
-            sess.conf.set("spark.sql.shuffle.partitions", orig_parts)
+            converged = True
+            break
+        e = new
+        sig = new_sig
     if not converged:
         import warnings
 
@@ -891,8 +841,8 @@ def connected_components(
         .agg(F.min("comp").alias("comp"))
     )
     all_nodes = (
-        pairs.select(F.col(col_a).alias("node"))
-        .union(pairs.select(F.col(col_b).alias("node")))
+        inp.select(F.col("a").alias("node"))
+        .union(inp.select(F.col("b").alias("node")))
         .distinct()
     )
     singletons = all_nodes.join(star, "node", "left_anti").select(
@@ -948,7 +898,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     reliable = os.environ.get("SPARK_GRAFT_CC_RELIABLE", "") == "1"
-    pairs = _minhash_pairs_persisted(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = q_dedup_minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
     labels = connected_components(
         pairs, "doc_a", "doc_b", reliable=reliable
     ).withColumnRenamed("node", "doc_id")
@@ -961,28 +911,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PAIRS_MEMO: dict[tuple, tuple] = {}
-
-
-def _minhash_pairs_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The verified MinHash pair relation as a shared persisted intermediate
-    for its COMPOSITE consumers (cluster resolution, and through it the
-    training pipeline — q_dedup_minhash_pairs itself stays unmemoized so
-    the registered query always exercises the live plan): the same
-    (session, table-state) rule as the shingle/bucket relations. The pair
-    set is tiny (verified near-dups), so the persist is cheap and the CC
-    loop's initial checkpoint reads materialized rows instead of re-running
-    the band join + verify per call."""
-    from ..sources.io import _stat_sig, table_path
-    from ._memo import session_memo
-
-    return session_memo(
-        _PAIRS_MEMO, spark, f"{sf_dir}|minhash-pairs",
-        lambda: _stat_sig(table_path(sf_dir, "documents")),  # fresh-at-build
-        lambda: q_dedup_minhash_pairs(spark, sf_dir),
-    )
-
-
 _CC_LABELS_MEMO: dict[tuple, tuple] = {}
 
 
@@ -991,8 +919,10 @@ def _cc_labels_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified MinHash pair graph, as a shared persisted intermediate for its
     COMPOSITE consumers (the leakage-safe split and the training pipeline —
     q_dedup_clusters itself stays unmemoized so the registered CC query
-    always exercises the live star-round loop): the same (session,
-    table-state) rule as the pair/shingle relations. The CC fixpoint runs
+    always exercises the live star-round loop), kept per (session,
+    table-state) in ``_memo.session_memo``: checkpointed rounds never
+    rebuild to an equal plan, so the CacheManager cannot serve it. The CC
+    fixpoint runs
     EAGERLY (one action per two star rounds), so before r14 every composite
     consumer re-paid the full multi-round loop per call — pure fixed job
     latency at bench scale, and at 100 TB exactly the artifact a production
@@ -1000,10 +930,10 @@ def _cc_labels_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     remove shuffles outright — here, remove whole recomputed job chains).
     Labels are deterministic (min reachable id), so a memo hit cannot
     change any result."""
+    import os
+
     from ..sources.io import _stat_sig, table_path
     from ._memo import session_memo
-
-    import os
 
     # the reliable flag is part of the memo IDENTITY (ADVICE r14): labels
     # are equal either way, but lost-executor recompute goes through
@@ -1012,7 +942,7 @@ def _cc_labels_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     reliable = os.environ.get("SPARK_GRAFT_CC_RELIABLE", "") == "1"
 
     def _build() -> DataFrame:
-        pairs = _minhash_pairs_persisted(spark, sf_dir).select("doc_a", "doc_b")
+        pairs = q_dedup_minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
         return (
             connected_components(pairs, "doc_a", "doc_b", reliable=reliable)
             .withColumnRenamed("node", "doc_id")
@@ -1146,7 +1076,7 @@ def q_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Construction: roots come from the verified MinHash pair graph's
     connected components (q_dedup_clusters' machinery, shared through the
-    memoized pair relation); singletons root to themselves; membership is
+    memoized cluster labels); singletons root to themselves; membership is
     the established portable md5 split hash (q_train_test_split's F8
     spelling) applied to the ROOT. Per split: doc count, distinct-cluster
     count, and how many non-canonical dup members rode along. Leakage
@@ -1783,7 +1713,7 @@ def q_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties by hash) makes prefixes the RAREST shingles, so boilerplate
     never fans out candidates unless the filter needs it.
 
-    Scale shape: shingle sets come from the memoized barriered
+    Scale shape: shingle sets come from the cached barriered
     _shingle_arrays_persisted (shared with the minhash family — one
     build per session/corpus); document frequencies are one linear
     token shuffle; the canonical per-set order is a ROW-LOCAL sort_array
@@ -1804,25 +1734,14 @@ def q_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PREF_MEMO: dict[tuple, tuple] = {}
-
-
 def _setsim_prefix_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The canonical-order prefix relation (doc_id, n, pos, h), persisted
-    with the family's count barrier and memoized per (session,
-    table-state) — the candidate stage SELF-JOINS it, and without a
+    """The canonical-order prefix relation (doc_id, n, pos, h), cached with
+    the family's count barrier — the candidate stage SELF-JOINS it, and without a
     materialization point each join side re-runs the whole df-hydration
     shuffle + per-doc canonical sort (measured ~2x the stage cost; the
     _shingle_arrays_persisted rationale applies verbatim)."""
-    from ..sources.io import _stat_sig, table_path
-    from ._memo import session_memo
-
-    return session_memo(
-        _PREF_MEMO, spark, sf_dir,
-        lambda: _stat_sig(table_path(sf_dir, "documents")),
-        lambda: _setsim_prefix(
-            _shingle_arrays_persisted(spark, sf_dir), SETSIM_TAU
-        ),
+    return persisted(
+        _setsim_prefix(_shingle_arrays_persisted(spark, sf_dir), SETSIM_TAU)
     )
 
 
@@ -2019,7 +1938,7 @@ def containment_join_sets(
 
     The verify hydrates both sets by doc_id and computes exact
     |∩|/|a| row-locally — one correctly-rounded division of exact ints,
-    bit-identical across engines. Scale shape mirrors setsim: memoized
+    bit-identical across engines. Scale shape mirrors setsim: cached
     persisted probe/posting relations, SHUFFLE_HASH candidate join
     (both sides corpus-scale on a crawl), distinct before hydration;
     candidates pair only within decorrelated replicas at ×K, so the
@@ -2078,45 +1997,24 @@ def containment_candidates(
     )
 
 
-_CONT_PREF_MEMO: dict[tuple, tuple] = {}
-_CONT_POST_MEMO: dict[tuple, tuple] = {}
-
-
 def _containment_prefix_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The containment probe-prefix at CONTAIN_TAU (shorter than the
-    Jaccard one, so not shared with _setsim_prefix_persisted), persisted
-    with the family's count barrier and memoized per (session,
-    table-state) — the _setsim_prefix_persisted rationale."""
-    from ..sources.io import _stat_sig, table_path
-    from ._memo import session_memo
-
-    return session_memo(
-        _CONT_PREF_MEMO, spark, sf_dir,
-        lambda: _stat_sig(table_path(sf_dir, "documents")),
-        lambda: _setsim_prefix(
-            _shingle_arrays_persisted(spark, sf_dir), CONTAIN_TAU
-        ),
+    Jaccard one, so not shared with _setsim_prefix_persisted), cached with
+    the family's count barrier — the _setsim_prefix_persisted rationale."""
+    return persisted(
+        _setsim_prefix(_shingle_arrays_persisted(spark, sf_dir), CONTAIN_TAU)
     )
 
 
 def _containment_postings_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The full canonical posting relation (the indexed side), persisted +
-    memoized like the prefix — without the barrier each candidate-join
+    """The full canonical posting relation (the indexed side), cached like
+    the prefix — without the barrier each candidate-join
     side re-runs the df shuffle + per-doc canonical sort."""
-    from ..sources.io import _stat_sig, table_path
-    from ._memo import session_memo
-
-    return session_memo(
-        _CONT_POST_MEMO, spark, sf_dir,
-        lambda: _stat_sig(table_path(sf_dir, "documents")),
-        lambda: _containment_postings(
-            _shingle_arrays_persisted(spark, sf_dir)
-        ),
-    )
+    return persisted(_containment_postings(_shingle_arrays_persisted(spark, sf_dir)))
 
 
 def _containment_oracle() -> str:
@@ -2201,7 +2099,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 doc_id split (the q_train_test_split F8 spelling; 20% plays the
     arriving batch) so both twins derive the same membership.
 
-    Plan: the SAME memoized shingle arrays and the SAME adaptive LSH
+    Plan: the SAME cached shingle arrays and the SAME adaptive LSH
     banding as q_dedup_minhash_pairs (shared through minhash_bands — any
     banding drift would silently change the candidate set), but the
     candidate join is new-bands × base-bands (A-vs-B, not self): at
@@ -2395,7 +2293,7 @@ def q_containment_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision (drop the contained member, keep the container; equal-size
     mutual pairs keep exactly the smallest doc_id). The decision a
     100 TB clipped-page/boilerplate pass commits before rewriting the
-    corpus. Rides the same memoized shingle/prefix/posting relations as
+    corpus. Rides the same cached shingle/prefix/posting relations as
     q_containment_join — any candidate-stage drift would move both
     hashes. best_containment is one correctly-rounded division of exact
     ints (MAX over identical doubles) — no rounding discipline needed."""

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import exact_sum, o_exact_sum, query
-from ..sources.io import load_spread, load_table, table_rows
+from ..sources.io import load_spread, load_table, persisted, table_rows
 
 TOP_K = 5
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -301,7 +301,6 @@ def _neardup_params(n: int) -> tuple[int, int]:
     return lsh_l, k
 
 
-_BUCKETS_MEMO: dict[tuple, tuple] = {}
 _IVF_MEMO: dict[tuple, tuple] = {}
 
 PLANE_NNZ = 8  # non-zero dims per hyperplane (sparse random projections)
@@ -439,37 +438,15 @@ def q_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per vector): measured at the 10× corpus, cached 2.90 s vs 4.47 s
     # recomputed — the opposite trade from the dedup shingle relations,
     # whose fat arrays make recompute cheaper than caching. Persist +
-    # count barrier (lazy cache races across the two self-join sides),
-    # MEMOIZED per (session, table-state) so repeated calls share one
-    # cached copy instead of stacking persists (the dedup-family rule).
-    from ..sources.io import _stat_sig, table_path
-    from ._memo import session_memo
-
-    def _params() -> tuple:
-        # derived INSIDE the sig/build callables (both run under the memo's
-        # key lock): a rewrite crossing a size regime while this caller
-        # waited for the lock must re-derive (L, k) from the FRESH footer
-        # stats, or the build would band the new corpus with stale floor
-        # params (r6 review). table_rows re-stats per call (sig-keyed
-        # cache), so this is ~µs.
-        return _neardup_params(table_rows(sf_dir, "embeddings"))
-
-    buckets = session_memo(
-        _BUCKETS_MEMO,
-        spark,
-        sf_dir,
-        # signature carries (L, k) alongside the table state: the bucket
-        # relation is a FUNCTION of the params, so a different banding
-        # (size-regime change after an amplification, or a test forcing the
-        # grown regime) must never be satisfied by a memoized floor-params
-        # relation (r6 review). Callable → evaluated fresh-at-build, and
-        # re-checked after materialization (a mid-build rewrite returns the
-        # relation unmemoized — _memo.session_memo).
-        lambda: (_stat_sig(table_path(sf_dir, "embeddings")), *_params()),
-        lambda: t.filter(_bucketable(F.col("v"))).select(
-            "vec_id",
-            F.explode(_lsh_tables(*_params(), F.col("v"))).alias("tb"),
-        ).select("vec_id", "tb.tbl", "tb.bkt"),
+    # count barrier (lazy cache races across the two self-join sides)
+    # through the CacheManager, so repeated calls share one cached copy.
+    # (L, k) are part of the plan, so a different banding (a size-regime
+    # change after a rewrite) is a different cache entry.
+    params = _neardup_params(table_rows(sf_dir, "embeddings"))
+    buckets = persisted(
+        t.filter(_bucketable(F.col("v")))
+        .select("vec_id", F.explode(_lsh_tables(*params, F.col("v"))).alias("tb"))
+        .select("vec_id", "tb.tbl", "tb.bkt")
     )
     a = buckets.select(F.col("vec_id").alias("vec_a"), "tbl", "bkt")
     b = buckets.select(F.col("vec_id").alias("vec_b"), "tbl", "bkt")

@@ -246,8 +246,8 @@ COMMENTARY = {
         "Exact set-similarity join (round 10): AllPairs prefix filter + "
         "PPJoin length/positional prunes. Canonical rare-first order is "
         "one linear token shuffle (df) + a row-local per-set sort — no "
-        "global vocabulary sort; the prefix relation is persisted + "
-        "memoized (its self-join would otherwise re-run the df-hydration "
+        "global vocabulary sort; the prefix relation is cached behind a "
+        "count barrier (its self-join would otherwise re-run the df-hydration "
         "chain per side); candidates join prefix-token to prefix-token "
         "pinned SHUFFLE_HASH (both sides corpus-scale on a crawl), dedupe "
         "BEFORE the verify, and the verify hydrates full sets by doc_id "
@@ -278,7 +278,7 @@ COMMENTARY = {
         "(|clustered docs|, tiny vs corpus) broadcasts into one corpus "
         "left join, the root-hash split tag is row-local, and the only "
         "added shuffle is the final 2-group aggregate. Upstream cost IS "
-        "q_dedup_clusters' audited plan (shared memoized pair relation)."
+        "q_dedup_clusters' audited plan (shared memoized cluster labels)."
     ),
     "q_gopher_rules": (
         "Gopher quality-rule report (round 12): all seven published "
@@ -318,7 +318,7 @@ COMMENTARY = {
         "posting relation (no upper bound on |b| exists for "
         "containment), lossless length + positional prunes, distinct "
         "pairs hydrated for the exact |∩|/|a| verify. Both relations "
-        "persisted + memoized (the setsim barrier discipline); "
+        "cached behind a count barrier (the setsim discipline); "
         "candidate linearity certified by a direct ×10 count "
         "(scale_check.py --containcount)."
     ),

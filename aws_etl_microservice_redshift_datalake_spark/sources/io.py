@@ -26,6 +26,7 @@ import json
 import os
 import re
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -64,7 +65,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     first (pyarrow, cached per file-stat signature, so a rewritten table is
     re-checked); on a match the scan carries ``SCHEMAS[name]`` and building
     it launches no Spark job. Without a declared schema Spark infers one,
-    and inference is a job per load.
+    and inference is a job per load. A table rewritten since this process
+    last loaded it first has its cached relations refreshed, so no query
+    over the lake is served stale data.
 
     On any drift (a column missing, extra, reordered, or of another or
     unknown type) the load falls back to Spark's own inference, so a
@@ -75,12 +78,42 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     long carries ns or µs.
     """
     path = table_path(sf_dir, name)
+    _refresh_if_rewritten(spark, path)
     declared = SCHEMAS.get(name)
     if declared is not None and footer_schema(path) == declared:
         return spark.read.schema(declared).parquet(path)
     df = spark.read.parquet(path)
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):  # pragma: no cover
         df = df.withColumn("ts", normalize_epoch_ts("ts"))
+    return df
+
+
+# file-stat signature of each lake path when this process last loaded it
+_LOADED_SIGS: dict[str, tuple] = {}
+
+
+def _refresh_if_rewritten(spark: SparkSession, path: str) -> None:
+    """Refresh every cached relation read from ``path`` when its files changed
+    since this process last loaded it. The CacheManager matches a rebuilt plan
+    by the table's path, not its file state, so without this a relation
+    cached before an in-place rewrite is served stale. The refresh re-caches
+    lazily, and ``storageLevel`` still reads as cached meanwhile."""
+    try:
+        sig = _stat_sig(path)
+    except FileNotFoundError:
+        return
+    if _LOADED_SIGS.setdefault(path, sig) != sig:
+        spark.catalog.refreshByPath(path)
+        _LOADED_SIGS[path] = sig
+
+
+def persisted(df: DataFrame) -> DataFrame:
+    """``df`` cached behind a count barrier, unless the CacheManager already
+    holds an equal plan (``storageLevel`` is its canonical-plan lookup). The
+    barrier matters: a lazy cache read by several stages of one action is
+    computed by each of them."""
+    if df.storageLevel == StorageLevel.NONE:
+        df.persist().count()
     return df
 
 

@@ -54,11 +54,6 @@ from ..registry import money_col, o_money_col, query, rnd
 
 from ..scratch import process_scratch
 
-# stashed caller tz while a watermark stream is in flight — set by
-# stream_events_watermarkable (which pins the session to UTC), restored by
-# run_stream once the stream terminates. None = nothing to restore.
-_PREV_TZ: str | None = None
-
 # events.parquet is TIMESTAMP(NANOS) with isAdjustedToUTC=false: Spark 4.1's
 # vectorized reader converts it natively to TimestampNTZType (µs-truncated),
 # in batch AND streaming alike — verified empirically; the legacy
@@ -106,6 +101,30 @@ def _source_dir(sf_dir: str) -> str:
     return d
 
 
+def stream_session(spark: SparkSession) -> SparkSession:
+    """A new session over ``spark``'s SparkContext that one ``q_stream_*``
+    query is built and run on, so its settings never touch the caller's
+    session (other threads may be planning queries there):
+
+    - UTC: watermark queries cast the NTZ event time to an instant
+      (:func:`stream_events_watermarkable`), and a fixed zone keeps their
+      results independent of the caller's tz;
+    - shuffle partitions clamped to the core count: stateful streaming
+      locks that count into the state store at start(), and a default-conf
+      session (200) pays 200 state-store dirs and task launches PER
+      STATEFUL OPERATOR for a corpus that fits in a handful. On a cluster
+      defaultParallelism is the executor-core total, so the clamp still
+      yields a properly wide state store."""
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "UTC")
+    s.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(max(1, min(parts, spark.sparkContext.defaultParallelism))),
+    )
+    return s
+
+
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9: the events table as a Structured Streaming source with µs
     event-time ``ts`` (TimestampNTZType — the native read path; see
@@ -126,24 +145,13 @@ def stream_events_watermarkable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9 (watermark variant): events with ``ts`` as TimestampType.
 
     ``withWatermark`` rejects TIMESTAMP_NTZ (EVENT_TIME_IS_NOT_ON_TIMESTAMP
-    _TYPE), so watermark-carrying queries cast NTZ → instant under a pinned
-    UTC session timezone: same wall clock, deterministic regardless of the
-    caller session's tz (the driver's correctness session is vanilla).
-    Timestamp *outputs* of such queries must cast back with
-    ``.cast("timestamp_ntz")`` so results render the same wall clock as the
-    batch twins and the DuckDB oracle.
-
-    The UTC pin is a SESSION-level setting, so it is scoped: the caller's
-    previous tz is stashed and ``run_stream`` restores it after the stream
-    terminates (every watermark query executes inside ``run_stream`` and
-    outputs only NTZ/primitive columns, which are tz-independent once
-    materialized in the sink) — no tz leakage into later batch queries on
-    the same session (ADVICE r3)."""
-    global _PREV_TZ
-    prev = spark.conf.get("spark.sql.session.timeZone")
-    if prev != "UTC" and _PREV_TZ is None:
-        _PREV_TZ = prev
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _TYPE), so watermark-carrying queries cast NTZ → instant under the UTC
+    zone of a :func:`stream_session`: same wall clock, deterministic
+    whatever tz the caller's session uses. Timestamp *outputs* of such
+    queries must cast back with ``.cast("timestamp_ntz")`` so results
+    render the same wall clock as the batch twins and the DuckDB oracle."""
+    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
+        raise ValueError("build watermark streams on stream_session(spark)")
     s = stream_events(spark, sf_dir)
     if isinstance(s.schema["ts"].dataType, T.TimestampNTZType):
         s = s.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -153,30 +161,19 @@ def stream_events_watermarkable(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_stream(sdf: DataFrame, output_mode: str, timeout_s: int = 300) -> DataFrame:
     """S10 (harness half): run a streaming DataFrame to completion with
     ``trigger(availableNow=True)`` into a memory sink; return the sink
-    contents as a batch DataFrame. Checkpointed like any production query."""
+    contents as a batch DataFrame on the stream's session. Checkpointed
+    like any production query."""
     spark = sdf.sparkSession
     name = "s" + uuid.uuid4().hex[:12]
     ckpt = f"{process_scratch()}/ckpt-{name}"
-    # Stateful streaming locks shuffle-partition count into the state store at
-    # start(): a default-conf session (200) then pays 200 state-store dirs and
-    # task launches PER STATEFUL OPERATOR for a corpus that fits in a handful.
-    # Clamp to the session's core count for the harness run and restore after
-    # start — on a real cluster defaultParallelism is the executor-core total,
-    # so the same clamp yields a properly wide state store.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    n_state = max(1, min(int(prev_parts), spark.sparkContext.defaultParallelism))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q = (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     try:
         # awaitTermination returns False on timeout — surface that instead of
         # silently returning a partially-filled memory sink
@@ -185,13 +182,6 @@ def run_stream(sdf: DataFrame, output_mode: str, timeout_s: int = 300) -> DataFr
     finally:
         q.stop()
         shutil.rmtree(ckpt, ignore_errors=True)
-        # scope the watermark helper's UTC pin: the stream has terminated,
-        # its sink holds only tz-independent (NTZ/primitive) values, so the
-        # caller session's original tz can come back
-        global _PREV_TZ
-        if _PREV_TZ is not None:
-            spark.conf.set("spark.sql.session.timeZone", _PREV_TZ)
-            _PREV_TZ = None
     return spark.table(name)
 
 
@@ -256,6 +246,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded by the same explicit pre-filter as the batch twin (r8 NULL
     event-time contract): window() emits no group for them anyway, the
     oracle's time_bucket(NULL) would form a NULL group."""
+    spark = stream_session(spark)
     agg = (
         stream_events(spark, sf_dir)
         .filter(F.col("ts").isNotNull())
@@ -289,6 +280,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2: streaming sliding windows (10 min length, 5 min slide), complete
     mode; each event lands in exactly two windows. NULL-ts rows are
     excluded in both twins (the r8 NULL event-time contract)."""
+    spark = stream_session(spark)
     agg = (
         stream_events(spark, sf_dir)
         .filter(F.col("ts").isNotNull())
@@ -349,6 +341,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag-gap sessionizer formed a session from it — 689 vs 691 sessions
     measured).
     """
+    spark = stream_session(spark)
     s = (
         stream_events_watermarkable(spark, sf_dir)
         .filter(F.col("ts").isNotNull())
@@ -360,7 +353,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             rnd(F.sum(money_col(F.col("value")))).alias("session_value"),
         )
-        # NTZ cast in-stream (pinned-UTC execution tz) — see q_stream_watermark
+        # NTZ cast in-stream (the stream session's UTC) — see q_stream_watermark
         .select(
             "user_id",
             F.date_trunc("second", F.col("w.start"))
@@ -394,14 +387,15 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows whose end precedes the final watermark (max ts - 1h) are
     finalized and emitted; the trailing hour of windows is withheld as
     open state. The oracle's HAVING clause states that bound exactly."""
+    spark = stream_session(spark)
     agg = (
         stream_events_watermarkable(spark, sf_dir)
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "10 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
-        # NTZ cast INSIDE the stream (under the pinned-UTC execution tz):
-        # the sink must hold only tz-independent values, because by the
-        # time the driver collects, run_stream has restored the caller tz
+        # NTZ cast INSIDE the stream (under the stream session's UTC): the
+        # sink holds only tz-independent values, so the result reads the
+        # same under any session tz
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("window_start"),
             "n_events",
@@ -424,6 +418,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact streaming dedup with watermark-bounded state (the streaming twin
     of operators/dedup). Only the keys are returned: 'first occurrence'
     payloads depend on arrival order, keys do not."""
+    spark = stream_session(spark)
     dd = (
         stream_events_watermarkable(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -455,6 +450,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     → nation dimension chain, aggregated per nation in complete mode. The
     static side is re-planned per micro-batch, so dim updates are picked up
     between batches on a live cluster."""
+    spark = stream_session(spark)
     from ..sources.io import load_table
 
     dim = (
@@ -493,6 +489,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join condition is time-bounded, so the state store evicts rows once they
     can no longer match (the 100 TB-safe shape); over the finite stream the
     result equals the batch time-bounded self-join."""
+    spark = stream_session(spark)
     clicks = (
         stream_events_watermarkable(spark, sf_dir)
         .filter(F.col("event_type") == "click")
@@ -634,6 +631,7 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-ts rows are excluded in both twins (the r8 NULL event-time
     contract): a gap against a NULL instant is undefined, and the Arrow
     boundary would otherwise hand the kernel a NaT the SQL twin groups."""
+    spark = stream_session(spark)
     out = (
         stream_events(spark, sf_dir)
         .filter(F.col("ts").isNotNull())

@@ -151,11 +151,11 @@ def main() -> None:
     # contended-machine run must not read as a plan regression — the min is
     # the best available estimate of the plan's actual cost on this box
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    # SPARK_GRAFT_BENCH_COLD=1 (r15, VERDICT r14 #3): clear the session
-    # memos (minhash pairs, CC labels, LSH buckets, IVF model, prefix
-    # postings) before EVERY rep, so memoized composites report their cold
-    # first-call cost instead of a warm persisted read. Opt-in only — the
-    # default path (driver protocol) is unchanged.
+    # SPARK_GRAFT_BENCH_COLD=1 (r15, VERDICT r14 #3): clear Spark's cache
+    # (shingles, prefix postings, LSH buckets) and the session memos (CC
+    # labels, IVF model) before EVERY rep, so cached composites report
+    # their cold first-call cost instead of a warm persisted read. Opt-in
+    # only — the default path is unchanged.
     cold = os.environ.get("SPARK_GRAFT_BENCH_COLD") == "1"
     if cold:
         from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
@@ -166,6 +166,7 @@ def main() -> None:
         best = float("inf")
         for _ in range(reps):
             if cold:
+                spark.catalog.clearCache()
                 clear_session_memos(spark)
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).count()

@@ -528,8 +528,7 @@ def test_session_memo_evicts_superseded_and_dead(spark):
 def test_session_memo_concurrent_single_build(spark):
     """A Spark driver legitimately runs queries from many threads: 8 threads
     racing the same memo key must produce exactly ONE build (a lost race
-    would leak an unreferenced persisted copy in executor storage), and
-    distinct keys must not serialize behind one another's builds."""
+    would leak an unreferenced persisted copy in executor storage)."""
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
@@ -711,99 +710,6 @@ def test_driver_history_green_predicate(tmp_path):
         last_green2, _ = _driver_history(str(tmp_path))
     assert last_green2.get("q_all_green") == 1
     assert any("CORRECTNESS_r02" in str(w.message) for w in caught)
-
-
-def test_session_memo_lock_table_evicts_with_dead_sessions(spark):
-    """The per-key build-lock table must shrink together with the dead-entry
-    purge (VERDICT r5 #5 / ADVICE r5): a session that died leaves neither a
-    memo entry NOR a lock entry behind, while live keys keep their locks."""
-    import gc
-    import weakref
-
-    from aws_etl_microservice_redshift_datalake_spark.operators import _memo
-    from aws_etl_microservice_redshift_datalake_spark.operators._memo import session_memo
-
-    memo: dict = {}
-    live = session_memo(memo, spark, "/lock-live", "s", lambda: spark.range(2))
-    live_lkey = (id(memo), id(spark), "/lock-live")
-    assert live_lkey in _memo._LOCKS
-
-    class Dummy:
-        pass
-
-    dummy = Dummy()
-    dead_skey = (id(dummy), "/lock-dead")
-    dead_lkey = (id(memo), *dead_skey)
-    memo[(dead_skey, "s")] = (weakref.ref(dummy), "s", spark.range(3))
-    _memo._LOCKS[dead_lkey] = [__import__("threading").Lock(), 0]
-    del dummy
-    gc.collect()
-    session_memo(memo, spark, "/lock-live", "s", lambda: spark.range(2))
-    assert (dead_skey, "s") not in memo, "dead memo entry not purged"
-    assert dead_lkey not in _memo._LOCKS, "dead lock entry not evicted"
-    assert live_lkey in _memo._LOCKS, "live lock entry wrongly evicted"
-    # orphan sweep: an unpinned lock whose memo keys vanished while it was
-    # pinned during the purge is reaped on the next call (review finding)
-    orphan_lkey = (id(memo), 12345, "/orphan")
-    _memo._LOCKS[orphan_lkey] = [__import__("threading").Lock(), 0]
-    session_memo(memo, spark, "/lock-live", "s", lambda: spark.range(2))
-    assert orphan_lkey not in _memo._LOCKS, "orphaned lock entry not swept"
-    live.unpersist()
-    memo.clear()
-
-
-def test_session_memo_supersede_is_freshness_ordered(spark):
-    """Signature-keyed coexistence (ADVICE r5, tightened by the r6 review):
-    a caller whose stat signature predates a concurrent rewrite must NOT
-    unpersist the newer relation out from under its consumers — it gets a
-    relation matching ITS OWN signature (built if absent), which also keeps
-    an mtime-preserving restore / snapshot rollback CORRECT (the on-disk
-    state wins; the memo can never pin newer-mtimed data forever). Eviction
-    is freshness-ordered: installing a relation evicts only STRICTLY older
-    sigs of the same (session, sf_dir) — on a freshness tie both entries
-    coexist (ADVICE r6: coarse-mtime filesystems can stamp pre- and
-    post-rewrite states with the same mtime_ns, and evicting on the tie
-    would let a stale-sig straggler unpersist the newer relation).
-    Signatures are real _stat_sig shapes ((path, size, mtime_ns) tuples,
-    optionally nested)."""
-    from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
-        _sig_fresh,
-        session_memo,
-    )
-
-    old_sig = (("/d/part-0.parquet", 100, 1_000),)
-    new_sig = (("/d/part-0.parquet", 120, 2_000),)
-    assert _sig_fresh(old_sig) == 1_000 and _sig_fresh(new_sig) == 2_000
-    # composite (IVF-style) signatures order by the nested stat sig
-    assert _sig_fresh((new_sig, 32, 4)) == 2_000
-
-    memo: dict = {}
-    fresh = session_memo(memo, spark, "/ord", new_sig, lambda: spark.range(9))
-    # stale-sig arrival (restore-to-older-snapshot / racing pre-rewrite
-    # caller): builds ITS OWN relation; the newer one survives persisted
-    got = session_memo(memo, spark, "/ord", old_sig, lambda: spark.range(7))
-    assert got is not fresh and got.count() == 7
-    assert fresh.storageLevel.useMemory, "newer relation was unpersisted"
-    # exact-sig re-arrival is a plain hit on the coexisting entry
-    assert session_memo(memo, spark, "/ord", old_sig, lambda: 1 / 0) is got
-    assert session_memo(memo, spark, "/ord", new_sig, lambda: 1 / 0) is fresh
-    # freshness TIE (coarse-mtime rewrite: same mtime_ns, different size):
-    # the tied arrival coexists — it must NOT evict the equally-fresh entry
-    tied_sig = (("/d/part-0.parquet", 121, 2_000),)
-    tied = session_memo(memo, spark, "/ord", tied_sig, lambda: spark.range(3))
-    assert tied is not fresh and fresh.storageLevel.useMemory, (
-        "tied-sig arrival evicted the equally-fresh relation (ADVICE r6)"
-    )
-    # strictly newer signature supersedes ALL older-and-tied entries
-    newest_sig = (("/d/part-0.parquet", 130, 3_000),)
-    nxt = session_memo(memo, spark, "/ord", newest_sig, lambda: spark.range(4))
-    assert nxt is not fresh and not fresh.storageLevel.useMemory
-    assert not got.storageLevel.useMemory
-    assert [k for k in memo if k[0] == (id(spark), "/ord")] == [
-        ((id(spark), "/ord"), newest_sig)
-    ]
-    nxt.unpersist()
-    memo.clear()
 
 
 def test_exact_substring_production_k50(spark):
